@@ -84,10 +84,6 @@ private[graft] object BenchKernel {
   def buildSession(): SparkSession = {
     HeapPin.engage()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // AQE stays on (runtime broadcast conversion + partition coalescing
-    // help the join-heavy queries even at bench scale); env knob for
-    // A/B measurement only.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
     // GRAFT_BUCKETED_WH points the session at a bucketed warehouse
     // (metastore + sort-trust configs); unset = no-op, plain parquet
     val spark = graft.sources.BucketedWarehouse.configureFromEnv(
@@ -95,7 +91,6 @@ private[graft] object BenchKernel {
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", aqe)
         .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -110,58 +105,6 @@ private[graft] object BenchKernel {
     try SparkEntry.queries(name)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     finally CacheScope.drain()
-
-  // SPARK_GRAFT_PROBE=1: append a JvmProbe snapshot per timing to
-  // bench_probe.jsonl — the r10 suite-state-tax instrumentation
-  // (heap/GC/classes/scratch-disk/block counts before and after
-  // each query, so in-suite inflation can be attributed to the
-  // counter that actually grew)
-  val probe: Boolean = sys.env.get("SPARK_GRAFT_PROBE").contains("1")
-
-  /** In-process stack sampler (r16, probe mode only): every ~100 ms
-    * record the top frame of each RUNNABLE "Executor task launch
-    * worker" thread via ThreadMXBean. Per-slot histograms go into the
-    * probe line, so a taxed in-suite slot can be diffed against its
-    * isolated run by WHERE the task cycles went (external jstack
-    * attach proved unreliable mid-suite, and JFR perturbs the JIT
-    * enough to erase the very tax under investigation — measured:
-    * in-prefix q128 19.9→14.8 s under JFR while isolated ROSE
-    * 11.2→16.6). Sampling reads stack depth 1 of ≤32 threads at
-    * 10 Hz — overhead is noise against 32 busy cores.
-    */
-  private object StackSampler {
-    private val tmx = java.lang.management.ManagementFactory.getThreadMXBean
-    private val hist = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    @volatile private var on = false
-    private val t = new Thread("graft-stack-sampler") {
-      override def run(): Unit = while (true) {
-        if (on) {
-          val infos = tmx.getThreadInfo(tmx.getAllThreadIds, 2)
-          infos.foreach { ti =>
-            if (ti != null && ti.getThreadState == Thread.State.RUNNABLE &&
-              ti.getThreadName.startsWith("Executor task launch") &&
-              ti.getStackTrace.nonEmpty) {
-              val st = ti.getStackTrace
-              // skip the Unsafe/native leaf to land on the Spark frame
-              val f = st.find(e => !e.getClassName.startsWith("jdk.internal") &&
-                !e.getClassName.startsWith("sun.")).getOrElse(st(0))
-              hist.merge(s"${f.getClassName}.${f.getMethodName}", 1L, (a, b) => a + b)
-            }
-          }
-        }
-        Thread.sleep(100)
-      }
-    }
-    t.setDaemon(true)
-    def start(): Unit = { hist.clear(); on = true; if (!t.isAlive) t.start() }
-    /** Stop and return the top-k (frame, samples) pairs. */
-    def stopTop(k: Int): Seq[(String, Long)] = {
-      on = false
-      import scala.jdk.CollectionConverters._
-      hist.asScala.toSeq.map { case (f, n) => (f, n.longValue) }
-        .sortBy(-_._2).take(k)
-    }
-  }
 
   /** Per-query IO accounting (r11 regime fields): shuffle bytes
     * written + spill across the tasks of a timing window. Registered
@@ -253,19 +196,11 @@ private[graft] object BenchKernel {
       java.nio.file.Paths.get("bench_regime.jsonl")): Unit
     catch { case _: Throwable => () }
 
-  private def probeLine(line: String): Unit =
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_probe.jsonl"),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: Throwable => () }
-
   /** Bounded wait until the block-manager scratch dirs stop shrinking
     * — the r10 suite-state-tax fix: a GC only ENQUEUES the
     * ContextCleaner's disk deletes, and if a predecessor left tens of
     * GB of aborted shuffle/spill files the deletes would otherwise
-    * run CONCURRENTLY with the next timing's IO (ProbeSuiteTax: r9's
+    * run CONCURRENTLY with the next timing's IO (SUITETAX_r10.json: r9's
     * failed uncapped q106 left 74 GB on a 100%-full disk, still
     * 73.6 GB at q107's start, and q107 ran 2.1× slow while they
     * drained mid-query). A no-op (one directory walk) whenever
@@ -281,6 +216,43 @@ private[graft] object BenchKernel {
       Thread.sleep(500)
       bytes = org.apache.spark.graft.SparkStateProbe.diskUsage(sc)._2
     }
+  }
+
+  /** Process user/system CPU and host iowait/total/steal — the regime
+    * counters (r10 verdict item: the measurement regime lived in
+    * prose; now each bench row carries the sys-time share and iowait
+    * share of its own window). Ticks are converted at the canonical
+    * USER_HZ=100; consumers only ever use deltas and RATIOS of these,
+    * so the constant cancels even where a kernel deviates.
+    */
+  def cpuTimes: Seq[(String, Long)] = {
+    val self = try {
+      val stat = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get("/proc/self/stat")))
+      val rest = stat.substring(stat.lastIndexOf(')') + 2).split(" ")
+      // fields 14/15 (utime/stime) land at rest(11)/rest(12): rest(0)
+      // is field 3
+      Seq("proc_utime_ms" -> rest(11).toLong * 10,
+        "proc_stime_ms" -> rest(12).toLong * 10)
+    } catch { case _: Throwable => Seq("proc_utime_ms" -> -1L, "proc_stime_ms" -> -1L) }
+    val host = try {
+      // first 8 fields only (user..steal): guest/guest_nice are
+      // already included inside user/nice, and summing them would
+      // double-count VM time and bias the iowait share low
+      val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
+        .next().trim.split("\\s+").drop(1).take(8).map(_.toLong)
+      // steal (field 8) = cycles the HYPERVISOR ran someone else while
+      // this guest's vCPU was runnable. Invisible to thread-CPU
+      // accounting (the guest books stolen time as if the thread ran),
+      // so it is the only direct witness for the 3-30× single-slot
+      // storms measured r13: wall and "CPU" inflate together, iowait
+      // stays 0, and no in-process counter moves.
+      Seq("host_iowait_ticks" -> cpu(4), "host_total_ticks" -> cpu.sum,
+        "host_steal_ticks" -> cpu(7))
+    } catch { case _: Throwable =>
+      Seq("host_iowait_ticks" -> -1L, "host_total_ticks" -> -1L,
+        "host_steal_ticks" -> -1L) }
+    self ++ host
   }
 
   /** One sample's storm-relevant regime fields, alongside the wall
@@ -333,15 +305,17 @@ private[graft] object BenchKernel {
     * live on the bucketed/twin path, invisible to a plain-parquet
     * bench, and cross-round artifacts must never be compared across
     * layouts silently). "plain" = no warehouse resolves (the driver's
-    * own runs), "bucketed" = warehouse resolves but twin preferences
-    * are disabled (`GRAFT_NO_TWINS=1` A/B control), "twins" = the full
-    * layout incl. foreign-key fact twins.
+    * own runs), "bucketed" = the warehouse resolves but holds no
+    * foreign-key twin table (twin reads fall back to the primary
+    * layout), "twins" = the full layout incl. the fact twins.
     */
-  def layoutName(spark: SparkSession, sfDir: String): String =
-    if (graft.sources.BucketedWarehouse.resolve(spark, sfDir, "lineitem").isEmpty)
-      "plain"
-    else if (sys.env.get("GRAFT_NO_TWINS").contains("1")) "bucketed"
-    else "twins"
+  def layoutName(spark: SparkSession, sfDir: String): String = {
+    import graft.sources.BucketedWarehouse
+    if (BucketedWarehouse.resolve(spark, sfDir, "lineitem").isEmpty) "plain"
+    else if (BucketedWarehouse.twins.keys.exists(t => spark.catalog.tableExists(s"bk_$t")))
+      "twins"
+    else "bucketed"
+  }
 
   def timeOnce(
       spark: SparkSession,
@@ -375,9 +349,7 @@ private[graft] object BenchKernel {
     // the timed window (no-op when the MaxHeapFreeRatio pin held)
     HeapPin.regrow()
     settleScratch(spark)
-    val before = if (probe) graft.tools.JvmProbe.snapshot(spark) else Nil
-    if (probe) StackSampler.start()
-    val cpu0 = graft.tools.JvmProbe.cpuTimes.toMap
+    val cpu0 = cpuTimes.toMap
     val gc0 = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
     // r16 (suite-tax attribution): JIT compilation time and loaded-class
@@ -400,7 +372,7 @@ private[graft] object BenchKernel {
     // the listener bus is async: drain it so the window's last tasks'
     // shuffle/spill bytes land in THIS query's row, not the next one's
     org.apache.spark.graft.SparkStateProbe.drainListenerBus(spark.sparkContext)
-    val cpu1 = graft.tools.JvmProbe.cpuTimes.toMap
+    val cpu1 = cpuTimes.toMap
     val gc1 = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
     val jit1 = Option(java.lang.management.ManagementFactory.getCompilationMXBean)
@@ -444,15 +416,6 @@ private[graft] object BenchKernel {
       if (du >= 0) { totals.utimeMs += du; totals.stimeMs += ds }
       if (dtot >= 0) { totals.iowaitTicks += dio; totals.hostTicks += dtot }
       totals.gcMs += gc1 - gc0
-    }
-    if (probe) {
-      val after = graft.tools.JvmProbe.snapshot(spark)
-      val frames = StackSampler.stopTop(10)
-        .map { case (f, n) => s""""$f":$n""" }.mkString("{", ",", "}")
-      probeLine(s"""{"q":"$name","ok":$ok,"sec":${f"$dt%.3f"},""" +
-        s""""before":${graft.tools.JvmProbe.jsonObject(before)},""" +
-        s""""after":${graft.tools.JvmProbe.jsonObject(after)},""" +
-        s""""hot_frames":$frames}""")
     }
     Timing(if (ok) dt else -1.0, tcMs, brMb, sysShare, stealShare)
   }

@@ -3,7 +3,7 @@ package graft
 /** Per-query file-scan budgets above the suite default of ONE scan per
   * table per execution — the annotated-exception list behind
   * PlanQualitySpec's suite-wide [[graft.plans.ScanCensus]] guard (r8,
-  * promoting the r7 ScanAudit from a dev sweep to CI). Every entry
+  * promoting the r7 scan audit from a dev sweep to CI). Every entry
   * says WHY the extra scan is the designed plan and not the q128
   * defect class (a shared shuffle subtree whose persist was dropped).
   *
@@ -63,7 +63,7 @@ object ScanBudgets {
     "q98_fuzzy_entity_match" -> Map("part" -> 2),
     // per-column profiler: three pruned single-column scans read no
     // more bytes than one 3-column scan and beat every fused form
-    // (ProbeQ81 A/B at 100×, r13 — the one-scan typed-slot explode
+    // (q81 A/B at 100×, r13 — the one-scan typed-slot explode
     // was a measured negative result)
     "q81_profile_columns" -> Map("lineitem" -> 3),
     // SemDeDup: cell assignment side vs in-cell comparison side
@@ -173,7 +173,8 @@ object ScanBudgets {
   /** File scans run at BUILD time via a query's own driver actions —
     * the [[graft.plans.ScanLedger]] counts the plan census cannot see
     * (the actions finish before the returned plan exists). Sized by
-    * `graft.tools.LedgerAudit` at sf0.001 (r9); ScanLedgerSpec
+    * an r9 ledger sweep at sf0.001 (Verify's scan_ledger.json records
+    * the same counts per run); ScanLedgerSpec
     * enforces ledger ≤ plan budget + these, suite-wide. Justifications:
     *
     *  - ADJACENCY-MATERIALIZE (components queries): the persisted

@@ -32,7 +32,7 @@ object Verify {
     // name -> (counts, over-budget subset); the over-budget map makes
     // the artifact self-describing (r9 nit: the WARN went only to
     // stderr, so the committed json could not show whether a budget
-    // fired). LedgerAudit can re-check a committed artifact offline.
+    // fired).
     val ledgers = scala.collection.mutable.TreeMap[String, (Map[String, Int], Map[String, Int])]()
     SparkEntry.defs
       .filter(d => only.forall(_.contains(d.name)))

@@ -628,7 +628,7 @@ object AnalyticsQueries {
     // the two-scan join-back form.
     // A sketch regression (wrong merge, bad accuracy plumbing) flips
     // a boolean and breaks the hash. Exact companion: q84.
-    // r15 gap probe (verdict item 5, ProbeQ89 + PROBE_q89_r15.json,
+    // r15 gap probe (verdict item 5, PROBE_q89_r15.json,
     // calm at 100×): warm split = count-table 2.47 s / sketch 1.39 /
     // fold 0.14. The DuckDB "0.13 s" this was graded against times the
     // ORACLE — a 6-row COUNT(*) GROUP BY — not sketch work; the honest

@@ -178,7 +178,7 @@ object ConnectedComponents {
 
   /** Edge-count bound for the driver union-find tier of
     * [[runAdaptive]] — a MEASURED crossover, not a memory guess.
-    * ComponentsScale tier sweep on this box (broken-chain graphs,
+    * r11 tier sweep on a 32-core box (broken-chain graphs,
     * driver vs the contraction+alternating loop, same JVM per pair):
     * 0.13M edges driver 3.8 s vs loop 5.6; 0.5M: 3.0 vs 3.2 (the
     * tie); 1M: 5.1 vs 2.6; 2M/4M loop wins outright (pre-contraction
@@ -386,7 +386,7 @@ object ConnectedComponents {
     // encoder emit, ids ascending (= node order): the tuple encoder
     // codegen-serializes the driver array where the Row path paid a
     // per-row CatalystTypeConverters walk — measured ~2× on the
-    // 150k-label sf0.1 emit (ProbeQ91)
+    // 150k-label sf0.1 emit (r11 q91 stage timing)
     val out = new Array[(Long, Long)](n)
     var x = 0
     while (x < n) { out(x) = (ids(x), ids(find(x))); x += 1 }

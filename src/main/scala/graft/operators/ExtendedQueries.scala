@@ -270,7 +270,7 @@ object ExtendedQueries {
     // q81 — column profiler: the data-quality primitive a pipeline
     // runs before training (null counts, cardinality, min/max).
     // Per-column pruned scan + COUNT-TABLE two-level aggregate — the
-    // form the r13 A/B at 100× picked (tools/ProbeQ81: count-table
+    // form the r13 A/B at 100× picked (r13 q81 probe: count-table
     // 3.18 s vs 9.61 for the r8 mixed-distinct aggs, whose single
     // countDistinct alongside plain aggs still makes the planner
     // Expand ×2, and 3.63 for the one-scan typed-slot explode that

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Why decimal, not long: a hub with h in-neighbors accumulates
   * S ≈ h·Unit before damping, and the 85·S intermediate overflows
-  * Long at h ≈ 10^5 (found by the PageRankScale star probe — the
+  * Long at h ≈ 10^5 (found by the r4 500k-node star-graph probe — the
   * q01 scaled-long overflow lesson, one operator later). DECIMAL(38)
   * holds 10^38 — no realizable graph reaches it.
   *

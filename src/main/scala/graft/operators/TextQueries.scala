@@ -5,6 +5,7 @@ import graft.CacheScope
 import graft.{QueryDef, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.{CharNgramHashesSorted, CharNgramsDistinct, LongPosAgreeCount, WordShingles}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, DoubleType, FloatType, IntegerType}
@@ -61,13 +62,34 @@ object TextQueries {
       (2 to 4).map(j => min(substring(col("hx"), (j - 1) * 8 + 1, 8)).as(s"mh$j")): _*)
   }
 
-  /** Probe access for `graft.tools.BandProfile` (cap sizing). */
-  def minhashSigProbe(s: org.apache.spark.sql.SparkSession, dir: String) =
-    minhashSig(s, dir)
-
-  /** Probe access for `graft.tools.BandProfile` (q66 cap sizing). */
-  def simhashSigProbe(s: org.apache.spark.sql.SparkSession, dir: String, nBits: Int) =
-    simhashSig(s, dir, nBits)
+  /** Position-ordered per-document fold of `logp` (q86, q110) as a
+    * WINDOW running over (doc_id, pos): one row per doc carrying
+    * `tot` = Σ logp and `n` = its row count (r17; replaces
+    * collect_list(struct) + a position-ordered-sum kernel): the
+    * collect_list TypedImperativeAggregate ran through
+    * ObjectHashAggregate whose 128-key sort-based fallback fires on
+    * every real partition (probe: findNextSortedGroup hot at 100×)
+    * — so the rows were being SORTED anyway, plus per-doc object
+    * buffers and the q128-class interpreted call sites
+    * (getAccessor/BoundReference.eval megamorphic in-suite: 11.7 s
+    * in-suite vs 6.05 isolated calm). The window form pays the
+    * same doc_id exchange + an explicit codegen sort and nothing
+    * else. Exactness: both unbounded-frame aggregates accumulate
+    * rows IN SORT ORDER (pos ascending, unique per doc), so the
+    * double sum is the identical left-to-right add chain of
+    * `aggregate(sort_array(lps), 0d, acc + v)` (0.0+v1 ≡ v1: ln never
+    * yields −0.0) and count ≡ size — PosOrderedSumSpec pins it.
+    */
+  private[graft] def posOrderedFold(rows: DataFrame): DataFrame = {
+    val wd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    val wAll = wd.rowsBetween(
+      Window.unboundedPreceding, Window.unboundedFollowing)
+    rows.select(col("doc_id"), col("pos"), col("logp"))
+      .withColumn("tot", sum(col("logp")).over(wAll))
+      .withColumn("n", count(lit(1)).over(wAll))
+      .withColumn("rn", row_number().over(wd))
+      .filter(col("rn") === 1)
+  }
 
   private val simhashBits = 16
   private val hiHex = Seq("8", "9", "a", "b", "c", "d", "e", "f")
@@ -216,7 +238,7 @@ object TextQueries {
     * downstream transitive closure, volume linear). The cap is part
     * of the DEFINED semantics, mirrored in [[lshCandSql]], and sized
     * so it cannot bind at certification scales: measured max bucket
-    * is 3 at sf0.01 and 8 at sf0.1 (`graft.tools.BandProfile`), so
+    * is 3 at sf0.01 and 8 at sf0.1 (r9 band profile), so
     * every certification-scale bucket enumerates all pairs and the
     * oracle hash is unchanged — while at 100× replication, where the
     * LSH gray zone drives the max bucket to 569 and candidate volume
@@ -229,7 +251,7 @@ object TextQueries {
 
   /** Hub-star cap for q66's 16-bit simhash-half buckets — the same
     * defined-semantics policy as [[LshBucketCap]], but sized to its
-    * own measured collision profile (`BandProfile <dir> q66`): 16-bit
+    * own measured collision profile (r10 band profile): 16-bit
     * halves collide far more than 32-bit minhash bands, with max
     * buckets of 41 at sf0.01 and 404 at sf0.1 — so the cap sits at
     * 512 (> 404: provably non-binding at certification scales, the
@@ -464,8 +486,8 @@ object TextQueries {
     // more than a 32-bit minhash band (measured max bucket: 41 at
     // sf0.01, 404 at sf0.1, 32,646 at 100× replication where the
     // uncapped join's candidate volume reaches 2.60e9 pairs and the
-    // r9 suite spent 99.1 s on it — `graft.tools.BandProfile <dir>
-    // q66`). Buckets over the cap emit only their hub (min doc_id)
+    // r9 suite spent 99.1 s on it — r10 band profile). Buckets over
+    // the cap emit only their hub (min doc_id)
     // star — hub connectivity preserved, per-bucket volume linear,
     // 100× candidate volume 29.2M (90× down). The cap cannot bind at
     // certification scales (512 > 404), so the oracle answer there is
@@ -832,7 +854,7 @@ object TextQueries {
     // broadcasts; N is a scalar broadcast cross join, never a collect.
     // The top-3 window is EXCHANGE-FREE (documentsSpread co-locates
     // each doc, so partitionBy(doc_id) is satisfied; the cost is the
-    // partition-local sort). NEGATIVE RESULT (r14, tools/ProbeQ78 at
+    // partition-local sort). NEGATIVE RESULT (r14 q78 A/B at
     // 100×, min-of-3): replacing the window with a bounded top-k
     // object aggregate reads 7.63 s at Spark's default
     // ObjectHashAggregate fallback threshold (128 groups — it
@@ -926,30 +948,9 @@ object TextQueries {
       val n = vocab.agg(sum(col("c")).cast(DoubleType).as("n_tok"))
       val lp = vocab.crossJoin(broadcast(n))
         .select(col("token"), log(col("c") / col("n_tok")).as("logp"))
-      // Position-ordered fold as a WINDOW running over (doc_id, pos)
-      // (r17; replaces collect_list(struct) + the PosOrderedSum
-      // kernel): the collect_list TypedImperativeAggregate ran through
-      // ObjectHashAggregate whose 128-key sort-based fallback fires on
-      // every real partition (probe: findNextSortedGroup hot at 100×)
-      // — so the rows were being SORTED anyway, plus per-doc object
-      // buffers and the q128-class interpreted call sites
-      // (getAccessor/BoundReference.eval megamorphic in-suite: 11.7 s
-      // in-suite vs 6.05 isolated calm). The window form pays the
-      // same doc_id exchange + an explicit codegen sort and nothing
-      // else. Exactness: both unbounded-frame aggregates accumulate
-      // rows IN SORT ORDER (pos ascending, unique per doc), so the
-      // double sum is the identical left-to-right add chain the
-      // kernel computed (0.0+v1 ≡ v1: ln never yields −0.0), count ≡
-      // size, and the division promotes to double either way.
-      val wd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val wAll = wd.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      tok.join(broadcast(lp), "token")
-        .select(col("doc_id"), col("pos"), col("logp"))
-        .withColumn("tot", sum(col("logp")).over(wAll))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("rn", row_number().over(wd))
-        .filter(col("rn") === 1)
+      // position-ordered fold (see [[posOrderedFold]]); the division
+      // promotes to double as list_sum / len does
+      posOrderedFold(tok.join(broadcast(lp), "token"))
         .select(col("doc_id"),
           col("n").cast(IntegerType).as("n_tokens"),
           (col("tot") / col("n")).cast(FloatType).as("avg_logprob"))
@@ -1146,20 +1147,8 @@ object TextQueries {
       val lp = c2.join(broadcast(c1), "prev").crossJoin(broadcast(v))
         .select(col("prev"), col("w"),
           log((col("c2") + lit(1.0)) / (col("c1") + col("vsz"))).as("logp"))
-      // position-ordered fold as the window running over (doc_id,
-      // pos) — r17, same rewrite and same exactness argument as q86:
-      // the unbounded-frame sum/count accumulate in sort order (the
-      // kernel's left-to-right adds), and the object-agg fallback +
-      // interpreted per-element access disappear from the plan
-      val wd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val wAll = wd.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)
-      p.join(broadcast(lp), Seq("prev", "w"))
-        .select(col("doc_id"), col("pos"), col("logp"))
-        .withColumn("tot", sum(col("logp")).over(wAll))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("rn", row_number().over(wd))
-        .filter(col("rn") === 1)
+      // position-ordered fold, the same window as q86
+      posOrderedFold(p.join(broadcast(lp), Seq("prev", "w")))
         .select(col("doc_id"),
           col("n").cast(IntegerType).as("n_bigrams"),
           (col("tot") / col("n")).cast(FloatType).as("avg_logprob"))

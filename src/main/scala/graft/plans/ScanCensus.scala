@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import scala.collection.mutable
 
 /** Structural per-table FileScan census of a query plan — the r7
-  * ScanAudit promoted from a text-grep dev tool to a library both the
-  * audit tool and the suite-wide PlanQualitySpec budget guard share.
+  * scan audit promoted from a text-grep dev sweep to the library the
+  * suite-wide PlanQualitySpec budget guard runs on.
   *
   * Counts every `FileSourceScanExec` one *execution* of the frame
   * would run: walks the executed plan tree, descends through the AQE

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Production resolution of the bucketed join-table layout
-  * (r13, promoting the `tools/BucketedScale` probe that measured q05
+  * (r13, promoting the r12 bucketed-layout probe that measured q05
   * 18.8→2.8 s at 100× into a path the whole suite can run over).
   *
   * Layout: ONE bucket key per table — `lineitem`/`orders` co-bucketed
@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `part` on `p_partkey` (each joined against a fact side that
   * re-shuffles or broadcasts as its size dictates; a deployment
   * wanting the custkey join co-located too materializes a second
-  * orders projection, as [[graft.tools.BucketedScale]] models).
+  * orders projection — the foreign-key [[twins]] below).
   * Dims (`region`/`nation`) and the non-join tables stay plain
   * parquet.
   *
@@ -30,7 +30,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * None for any other requested dir — a stale warehouse can never
   * substitute wrong-scale data for a parquet read. Byte-identity of
   * results over the two layouts is asserted by BucketedWarehouseSpec
-  * and measured at 100× by BucketedScale.
+  * and by the oracle-checked bucketed Verify runs
+  * (`VERIFY_bucketed_r1*.json`).
   */
 object BucketedWarehouse {
 

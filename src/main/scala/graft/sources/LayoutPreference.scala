@@ -41,21 +41,11 @@ object LayoutPreference {
   private val twinPref: ThreadLocal[Map[String, String]] =
     ThreadLocal.withInitial(() => Map.empty[String, String])
 
-  /** A/B instrumentation (r16): `GRAFT_NO_TWINS=1` disables every
-    * twin preference for the process, forcing twin-routed queries
-    * back to the primary bucketed layout — the control side of a
-    * twin-vs-primary floor pair at the SAME binary (deleting the
-    * `.withTwinLayout` call to measure the control would change the
-    * binary and re-open the same-day/same-code ambiguity the floors
-    * method exists to close). Read once; never set by the driver.
-    */
-  private val noTwins: Boolean = sys.env.get("GRAFT_NO_TWINS").contains("1")
-
   /** The twin suffix the current query build prefers for `logical`
     * (None → primary bucketed layout, then plain parquet).
     */
   def twinFor(logical: String): Option[String] =
-    if (noTwins) None else twinPref.get.get(logical)
+    twinPref.get.get(logical)
 
   def withTwins[A](twins: Map[String, String])(body: => A): A = {
     val prev = twinPref.get

@@ -20,6 +20,14 @@ class PlanQualitySpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  /** A test whose queries persist through [[CacheScope]]: the registry
+    * drains even when an assertion fails, so one failure cannot leave
+    * it owned and fail later suites with a
+    * ConcurrentModificationException that hides the real cause.
+    */
+  private def drainedTest(name: String)(body: => Any): Unit =
+    test(name)(try body finally CacheScope.drain())
+
   test("q01: shipdate filter is pushed to the parquet scan, columns pruned") {
     val p = plan("q01_pricing_summary")
     assert(p.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate"))
@@ -134,7 +142,7 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(hashEx == 1, s"expected 1 hash exchange, got $hashEx:\n${p.take(2000)}")
   }
 
-  test("q87: size-adaptive funnel — fold tier below the stats gate, staged tier all-codegen above it") {
+  drainedTest("q87: size-adaptive funnel — fold tier below the stats gate, staged tier all-codegen above it") {
     // r17 dispatch (FunnelOps.funnelAdaptive): below 64 MB of
     // optimizer-estimated events the one-shuffle ordered fold wins
     // (three fixed jobs cost more than the tiny interpreted fold);
@@ -167,7 +175,6 @@ class PlanQualitySpec extends AnyFunSuite {
       .map(_.cacheBuilder.cachedPlan.canonicalized).distinct.size
     assert(distinctCaches == 2,
       s"expected the v/c stage persists (2 distinct cached relations), got $distinctCaches")
-    CacheScope.drain()
   }
 
   // documentsSpread's REPARTITION_BY_NUM spreads the single-file test
@@ -236,23 +243,21 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(!liScan.contains("l_shipdate") && !liScan.contains("l_quantity"), liScan)
   }
 
-  test("q69: components iteration never degenerates to cartesian/nested-loop joins") {
+  drainedTest("q69: components iteration never degenerates to cartesian/nested-loop joins") {
     val p = plan("q69_neardup_components")
     assert(!p.contains("CartesianProduct"), s"cartesian in components plan:\n${p.take(1500)}")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested loop:\n${p.take(1500)}")
-    CacheScope.drain()
   }
 
-  test("q101: PageRank final plan — co-partitioned joins only, no cartesian, no single-partition exchange") {
+  drainedTest("q101: PageRank final plan — co-partitioned joins only, no cartesian, no single-partition exchange") {
     val p = plan("q101_pagerank_orders")
     assert(!p.contains("CartesianProduct"), s"cartesian in pagerank plan:\n${p.take(1500)}")
     assert(!p.contains("BroadcastNestedLoopJoin"))
     // the rank frame must never collapse to one partition mid-iteration
     assert(!p.contains("Exchange SinglePartition"), s"single-partition exchange:\n${p.take(2000)}")
-    CacheScope.drain()
   }
 
-  test("q116: histogram is rank-only — returned plan touches no fact data at all") {
+  drainedTest("q116: histogram is rank-only — returned plan touches no fact data at all") {
     val p = plan("q116_equidepth_hist")
     // the whole histogram derives from the ≤2k−1 rank-rows one
     // valuesAtRanks pass surfaces (single fact scan, during build);
@@ -264,10 +269,9 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.linesIterator.count(_.contains("FileScan parquet")) == 0,
       s"returned histogram re-reads the fact table:\n${p.take(1500)}")
     assert(p.contains("LocalTableScan"), s"expected driver-local result:\n${p.take(1500)}")
-    CacheScope.drain()
   }
 
-  test("q120: weighted-median windows are __pid-local (never one task per group); offsets broadcast") {
+  drainedTest("q120: weighted-median windows are __pid-local (never one task per group); offsets broadcast") {
     val p = plan("q120_weighted_median")
     // every window in the plan must be partitioned by the range
     // partition id — a windowspec without __pid is a single-task group
@@ -276,16 +280,16 @@ class PlanQualitySpec extends AnyFunSuite {
     specs.foreach(l => assert(l.contains("__pid"), s"group-global window:\n$l"))
     assert(p.contains("BroadcastHashJoin"), s"offset join not broadcast:\n${p.take(1500)}")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"))
-    CacheScope.drain()
   }
 
   test("q01/q05/q53: filters still reach the scans when AQE re-plans (no regression at suite scale)") {
     // the r6 verdict asked for explicit no-cartesian + bounded-exchange
     // pins on the headline relational queries
     Seq("q01_pricing_summary", "q05_region_revenue", "q53_neardup_pipeline").foreach { q =>
-      val p = plan(q)
-      assert(!p.contains("CartesianProduct"), s"$q grew a cartesian:\n${p.take(1200)}")
-      CacheScope.drain()
+      try {
+        val p = plan(q)
+        assert(!p.contains("CartesianProduct"), s"$q grew a cartesian:\n${p.take(1200)}")
+      } finally CacheScope.drain()
     }
   }
 
@@ -310,17 +314,18 @@ class PlanQualitySpec extends AnyFunSuite {
       "q128_copurchase_lift" -> ("lineitem", 4),
       "q129_retention_sets" -> ("events", 2))
     factOf.foreach { case (q, (fact, minTotal)) =>
-      val df = SparkEntry.queries(q)(spark, dir)
-      val imrs = df.queryExecution.withCachedData
-        .collect { case r: InMemoryRelation => r }
-      val factCaches = imrs.filter(_.cacheBuilder.cachedPlan.toString.contains(s"$fact.parquet"))
-      assert(factCaches.size >= minTotal,
-        s"$q: ${factCaches.size} cached $fact reads, expected >= $minTotal — a persist was dropped")
-      CacheScope.drain()
+      try {
+        val df = SparkEntry.queries(q)(spark, dir)
+        val imrs = df.queryExecution.withCachedData
+          .collect { case r: InMemoryRelation => r }
+        val factCaches = imrs.filter(_.cacheBuilder.cachedPlan.toString.contains(s"$fact.parquet"))
+        assert(factCaches.size >= minTotal,
+          s"$q: ${factCaches.size} cached $fact reads, expected >= $minTotal — a persist was dropped")
+      } finally CacheScope.drain()
     }
   }
 
-  test("q13 layout-gated persist: on plain parquet the grouped output is NOT materialized") {
+  drainedTest("q13 layout-gated persist: on plain parquet the grouped output is NOT materialized") {
     // r16: the pre-sort persist exists for the TWIN layout, where no
     // exchange sits below the range sort and the bounds-sampling job
     // would re-execute the whole fact-scale SMJ+agg. On plain parquet
@@ -338,7 +343,6 @@ class PlanQualitySpec extends AnyFunSuite {
       .collect { case r: InMemoryRelation => r }
     assert(imrs.isEmpty,
       s"q13 on plain parquet: expected no persist below the sort, found ${imrs.size}")
-    CacheScope.drain()
   }
 
   test("q111/q125 size-conditional persist: below the threshold the du subtree is NOT materialized") {
@@ -351,18 +355,19 @@ class PlanQualitySpec extends AnyFunSuite {
     // bench band (estimates there: 53–95 MB vs the 16 MB threshold).
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     Seq("q111_hll_daily_union", "q125_rolling_distinct_users").foreach { q =>
-      val df = SparkEntry.queries(q)(spark, dir)
-      val imrs = df.queryExecution.withCachedData
-        .collect { case r: InMemoryRelation => r }
-      val factCaches = imrs.filter(_.cacheBuilder.cachedPlan.toString.contains("events.parquet"))
-      assert(factCaches.isEmpty,
-        s"$q: expected the small-input path to skip the persist, found ${factCaches.size}")
-      CacheScope.drain()
+      try {
+        val df = SparkEntry.queries(q)(spark, dir)
+        val imrs = df.queryExecution.withCachedData
+          .collect { case r: InMemoryRelation => r }
+        val factCaches = imrs.filter(_.cacheBuilder.cachedPlan.toString.contains("events.parquet"))
+        assert(factCaches.isEmpty,
+          s"$q: expected the small-input path to skip the persist, found ${factCaches.size}")
+      } finally CacheScope.drain()
     }
   }
 
   test("suite-wide scan budget: no query file-scans any table beyond its declared budget") {
-    // the r7 ScanAudit promoted to CI (r8): a structural FileScan
+    // the r7 scan audit promoted to CI (r8): a structural FileScan
     // census (graft.plans.ScanCensus — AQE-unwrapped, subquery-aware,
     // each distinct cached build plan counted once) over EVERY
     // registered query, checked against the default budget of 1 scan

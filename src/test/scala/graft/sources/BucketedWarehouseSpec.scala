@@ -13,7 +13,7 @@ import java.nio.file.Files
   * with a marker mismatch (warehouse built from another SF dir) or a
   * missing catalog table, resolution declines and the parquet read
   * proceeds. (Cross-JVM metastore persistence is exercised by
-  * BuildWarehouse/BucketedScale at scale; a spec JVM cannot switch
+  * BuildWarehouse and the bucketed 100× bench runs; a spec JVM cannot switch
   * its already-built session to a Hive catalog, so this spec
   * registers the bucketed tables in the session catalog directly.)
   */
@@ -197,13 +197,26 @@ class BucketedWarehouseSpec extends AnyFunSuite {
       assert(BucketedWarehouse.twinActive(spark, sfDir, "orders")
         === false, "twinActive needs the query's twin preference in scope")
       val d = SparkEntry.defs.find(_.name == "q13_customer_order_counts").get
-      val df = d.build(spark, sfDir)
-      val imrs = df.queryExecution.withCachedData
-        .collect { case r: InMemoryRelation => r }
-      assert(imrs.nonEmpty,
-        "q13 on the twin layout: the pre-sort persist was dropped")
-      graft.CacheScope.drain()
+      try {
+        val df = d.build(spark, sfDir)
+        val imrs = df.queryExecution.withCachedData
+          .collect { case r: InMemoryRelation => r }
+        assert(imrs.nonEmpty,
+          "q13 on the twin layout: the pre-sort persist was dropped")
+      } finally graft.CacheScope.drain()
     }
+  }
+
+  test("the layout stamp derives from the warehouse: twins, then bucketed without twin tables, else plain") {
+    withWarehouse {
+      assert(graft.BenchKernel.layoutName(spark, sfDir) == "twins")
+      BucketedWarehouse.twins.keys.foreach(n => spark.sql(s"DROP TABLE IF EXISTS bk_$n"))
+      assert(graft.BenchKernel.layoutName(spark, sfDir) == "bucketed",
+        "a warehouse without twin tables is the primary bucketed layout")
+      // marker mismatch: the warehouse was built from another SF dir
+      assert(graft.BenchKernel.layoutName(spark, "/root/testdata/sf0.01") == "plain")
+    }
+    assert(graft.BenchKernel.layoutName(spark, sfDir) == "plain")
   }
 
   test("the partkey twin joins bk_part without an exchange on either side") {

@@ -35,13 +35,10 @@ reject a confirmed cluster, and it also shouldn't BE the citable
 floor, since only values another independent JVM reproduced within
 tolerance are evidence of the plan's cost rather than one draw's luck.
 
-Per-attempt storm flags (r15 verdict item 6): each attempt's regime
-(task-CPU, input MB, sys/steal shares, aggregated from its bench
-rows) is classified against the best attempt with the SAME storm
-signature graft.Bench uses in-process (Bench.scala stormSignature):
-task-CPU inflation at flat input, host steal, or a sys-share step.
-Floors artifacts then carry regime-classified attempts, not just
-wall-clock spread.
+Storm classification has ONE implementation: each attempt's
+graft.Bench applies BenchKernel.stormSignature (Bench.scala) to its
+own samples and draws extra samples where it fires; the per-timing
+rows behind that decision are kept in the artifact's `runs`.
 
 Usage: tools/isolated_floors.py <sfdir> <out.json> <query> [query...]
   env: GRAFT_FLOOR_ATTEMPTS (max fresh JVMs per query, default 5)
@@ -51,42 +48,6 @@ import json
 import os
 import subprocess
 import sys
-
-
-def attempt_timing(runs):
-    """Fold an attempt's per-timing bench rows into one Timing-like
-    dict mirroring graft.BenchKernel.Timing: the fields of the FASTEST
-    ok row (the row behind the attempt's reported min)."""
-    ok = [r for r in runs if r.get("ok") and r.get("sec", -1) >= 0]
-    if not ok:
-        return None
-    r = min(ok, key=lambda r: r["sec"])
-    return {"sec": r["sec"], "task_cpu_ms": r.get("task_cpu_ms", -1),
-            "input_mb": r.get("input_mb", -1),
-            "sys_share": r.get("sys_share", -1.0),
-            "steal_share": r.get("host_steal_share", -1.0)}
-
-
-def storm_signature(fast, slow):
-    """Port of graft.BenchKernel.stormSignature (Bench.scala): does
-    `slow` carry storm evidence relative to `fast`? Mirrors the r17
-    in-process rule: the cpu-inflation arm requires BOTH input counts
-    present and flat (r15 ADVICE: missing IO metrics must not default
-    to 'flat input'), with the r17 zero-input fallback — a CONSISTENT
-    0 MB on both sides is a genuinely sub-MB scan (q92/q93 class) and
-    keeps cpu-inflation protection above a 100 ms task-CPU floor."""
-    if fast is None or slow is None:
-        return False
-    fi, si = fast["input_mb"], slow["input_mb"]
-    flat_input = (fi > 0 and si > 0 and
-                  abs(fi - si) <= 0.1 * max(fi, si, 1)) or \
-        (fi == 0 and si == 0 and fast["task_cpu_ms"] >= 100)
-    cpu_inflated = flat_input and fast["task_cpu_ms"] > 0 and \
-        slow["task_cpu_ms"] > fast["task_cpu_ms"] * 1.4
-    host_anomaly = slow["steal_share"] > 0.02 or \
-        (slow["sys_share"] > 0.35 and fast["sys_share"] >= 0 and
-         slow["sys_share"] > fast["sys_share"] * 1.5)
-    return cpu_inflated or host_anomaly
 
 
 def calm_floor(secs, tol):
@@ -158,14 +119,8 @@ def main() -> None:
             # agreeing pair), not the global min a lone outlier could be
             best = min((a for a in valid if a[0] >= floor),
                        key=lambda a: a[0])
-            # regime-classify every attempt against the floor attempt
-            # (Bench.scala stormSignature, ported above)
-            base = attempt_timing(best[2])
-            storm_flags = [storm_signature(base, attempt_timing(a[2]))
-                           if a[0] >= 0 else None for a in attempts]
             results[q] = {"sec": best[0], "calm_pair": calm,
                           "attempts": secs,
-                          "attempt_storm": storm_flags,
                           "regime": best[1],
                           "runs": best[2]}
             flag = "" if calm else "  [NO CALM PAIR - suspect]"
@@ -183,10 +138,9 @@ def main() -> None:
                    "floor = lower of the lowest agreeing pair (r16: a lone "
                    "fast outlier neither storm-rejects a confirmed cluster "
                    "nor becomes the citable floor); graft.Bench internal "
-                   "min-of-2 (3rd sample on >1.5x spread) per attempt; "
-                   "attempt_storm = per-attempt stormSignature vs the floor "
-                   "attempt (task-CPU inflation at flat input, steal, "
-                   "sys step); regime+runs from the floor attempt only"),
+                   "min-of-2 per attempt, plus up to 2 extra samples where "
+                   "its in-process stormSignature or a >1.5x spread fires; "
+                   "regime+runs from the floor attempt only"),
         "queries": results,
     }
     with open(out, "w") as f:
