@@ -37,8 +37,6 @@ object ScanBudgets {
 
   val budgets: Map[String, Map[String, Int]] = Map(
     // SELF-JOIN class -------------------------------------------------
-    // in-degree vs out-degree aggregates of the same gold table joined
-    "flight_q6_inout_imbalance" -> Map("flight_gold_fixture" -> 2),
     // INTERSECT + EXCEPT legs over the same dim
     "q15_setops_nations" -> Map("nation" -> 2),
     // doc-pair scoring: both sides of the gram-profile join

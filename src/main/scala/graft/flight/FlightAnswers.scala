@@ -48,8 +48,8 @@ object FlightAnswers {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
   /** Q6 (`answers.py:110-130`, untested in the reference): airport
-    * with the largest |outgoing − incoming| flight count; inner join
-    * of the two aggregate sides (reference semantics).
+    * with the largest |outgoing − incoming| flight count, over airports
+    * seen on both sides (the reference's inner-join semantics).
     */
   def airportWithMostDiffInOutFlight(gold: DataFrame): Row =
     FlightQueries.inOutImbalance(gold).first()

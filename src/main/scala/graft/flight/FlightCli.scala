@@ -42,12 +42,11 @@ object FlightCli {
 
   /** Resolve the gold DataFrame: a direct snapshot dir (contains
     * parquet) or a base dir whose newest timestamped snapshot is taken
-    * (reference S5 semantics, answers.py:197-203).
+    * (reference S5 semantics, answers.py:197-203). A path holding no
+    * visible parquet is read as given, so Spark's own error names it.
     */
-  def resolveGold(spark: SparkSession, path: String): DataFrame = {
-    val snapshot = FlightIo.newestSnapshotDir(spark, path).getOrElse(path)
-    spark.read.parquet(snapshot)
-  }
+  def resolveGold(spark: SparkSession, path: String): DataFrame =
+    FlightIo.newestGold(spark, path).getOrElse(spark.read.parquet(path))
 
   def run(spark: SparkSession, path: String, question: String): String = {
     val name = question.replace('-', '_')

@@ -1,6 +1,6 @@
 package graft.flight
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.time.ZonedDateTime
@@ -60,23 +60,62 @@ object FlightIo {
       .write.partitionBy("year", "month", "day").mode("append").parquet(base)
   }
 
-  /** Newest-snapshot resolution (`answers.py:197-203`): list files
-    * recursively, keep dirs containing parquet, lexicographic max —
-    * same semantics as the reference's object listing, via Hadoop FS.
+  /** Newest-snapshot resolution (`answers.py:197-203`): the
+    * lexicographic max of the dirs under `base` that hold `.parquet`
+    * files — the reference's object-listing semantics, via Hadoop FS.
+    *
+    * Cost: O(depth) `listStatus` calls on a timestamped history, not one
+    * located status per file of the whole history. A recursive
+    * `listFiles` builds a `LocatedFileStatus` per file, which copies its
+    * permissions; without native Hadoop, `RawLocalFileSystem` loads those
+    * by forking `ls` once per file (~200 ms on a 20-snapshot history,
+    * growing with it), and on S3A the listing pages through
+    * every object of the history. `listStatus` loads no permissions.
+    *
+    * The walk lists each dir's children in descending `name + "/"`
+    * order, which is the order of their subtrees' paths, and stops at
+    * the first child whose subtree holds no path above the best dir
+    * found so far. A dir holding parquet is a candidate under its own
+    * path, without the slash, so `flights1` (parquet) still loses to a
+    * sibling `flights1-b/x` even though `flights1/` is listed first.
+    *
+    * Entries named `_…` or `.…` are skipped, Spark's hidden-path rule: a
+    * write in flight keeps its files under
+    * `<snapshot>/_temporary/0/_temporary/attempt_…/`, and a reader
+    * beside the writer must not take that partial snapshot as newest.
     */
   def newestSnapshotDir(spark: SparkSession, base: String): Option[String] = {
     val path = new Path(base)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return None
-    val it = fs.listFiles(path, true)
-    var dirs = List.empty[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        dirs = f.getPath.getParent.toString :: dirs
+    def visible(s: FileStatus): Boolean = {
+      val n = s.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
     }
-    dirs.sorted.lastOption
+    var best: Option[String] = None
+    def walk(dir: Path): Unit = {
+      val (subdirs, files) = fs.listStatus(dir).filter(visible).partition(_.isDirectory)
+      files.find(_.getPath.getName.endsWith(".parquet")).foreach { f =>
+        val d = f.getPath.getParent.toString
+        if (best.forall(_ < d)) best = Some(d)
+      }
+      // takeWhile is lazy: each child is tested against `best` as left
+      // by the walks of the children before it
+      subdirs.map(_.getPath).sortBy(_.getName + "/")(Ordering[String].reverse)
+        .iterator.takeWhile(p => best.forall(_ < p.toString + "/"))
+        .foreach(walk)
+    }
+    walk(path)
+    best
   }
+
+  /** The newest gold snapshot under `base`, if any (reference
+    * `answers.py:197-207`), read with the declared
+    * [[FlightModel.goldSchema]]: the pipeline wrote it, so the read
+    * skips Spark's schema-inference job.
+    */
+  def newestGold(spark: SparkSession, base: String): Option[DataFrame] =
+    newestSnapshotDir(spark, base).map(spark.read.schema(FlightModel.goldSchema).parquet(_))
 
   /** Storage bootstrap (`ensure_bucket_exists`, reference
     * `main.py:57-65`): make sure the base location exists before the

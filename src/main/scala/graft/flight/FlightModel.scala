@@ -67,14 +67,25 @@ object FlightModel {
     StructField("longitude", FloatType, nullable = true),
     StructField("country", StringType, nullable = true)))
 
-  /** Gold layout (order matters — pinned by the fixture's 22 columns). */
-  val goldColumns: Seq[String] = Seq(
-    "id", "aircraft_code", "time", "latitude", "longitude",
-    "origin_airport_iata", "destination_airport_iata", "number",
-    "on_ground", "airline_icao",
-    "origin_airport_name", "origin_latitude", "origin_longitude",
-    "origin_continent", "origin_country",
-    "destination_airport_name", "destination_latitude", "destination_longitude",
-    "destination_continent", "destination_country",
-    "airline_name", "distance")
+  /** Gold layout: the single definition of the gold snapshot's columns
+    * (order matters — pinned by the fixture's 22 columns) and types. All
+    * fields are nullable, as Spark's parquet reader makes every column.
+    * Readers of a snapshot the pipeline wrote pass it to
+    * `spark.read.schema`, which skips the schema-inference job.
+    */
+  val goldSchema: StructType = StructType(Seq(
+    "id" -> StringType, "aircraft_code" -> StringType, "time" -> StringType,
+    "latitude" -> FloatType, "longitude" -> FloatType,
+    "origin_airport_iata" -> StringType, "destination_airport_iata" -> StringType,
+    "number" -> StringType, "on_ground" -> IntegerType, "airline_icao" -> StringType,
+    "origin_airport_name" -> StringType, "origin_latitude" -> FloatType,
+    "origin_longitude" -> FloatType, "origin_continent" -> StringType,
+    "origin_country" -> StringType,
+    "destination_airport_name" -> StringType, "destination_latitude" -> FloatType,
+    "destination_longitude" -> FloatType, "destination_continent" -> StringType,
+    "destination_country" -> StringType,
+    "airline_name" -> StringType, "distance" -> FloatType
+  ).map { case (name, t) => StructField(name, t, nullable = true) })
+
+  val goldColumns: Seq[String] = goldSchema.fieldNames.toSeq
 }

@@ -57,6 +57,5 @@ final class FlightPipeline(
   /** Newest gold snapshot as a DataFrame (reference
     * `answers.py:197-207`).
     */
-  def latestGold(): Option[DataFrame] =
-    FlightIo.newestSnapshotDir(spark, goldBase).map(spark.read.parquet(_))
+  def latestGold(): Option[DataFrame] = FlightIo.newestGold(spark, goldBase)
 }

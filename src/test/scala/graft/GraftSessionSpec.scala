@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Cluster session profile: the S3A conf block must carry endpoint,
   * credentials, path-style access, and the magic committer wiring —
   * the set a cluster deploy against an S3-compatible store needs
-  * (reference parity: `main.py:68-92`). Pure-map spec, no egress.
+  * (reference parity: `main.py:68-92`). Pure-map spec, no egress; the
+  * defaults spec reads the shared test session's conf.
   */
 class GraftSessionSpec extends AnyFunSuite {
 
@@ -30,6 +31,10 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c("spark.hadoop.fs.s3a.committer.name") == "magic")
     assert(c("spark.hadoop.mapreduce.outputcommitter.factory.scheme.s3a") ==
       "org.apache.hadoop.fs.s3a.commit.S3ACommitterFactory")
+  }
+
+  test("the test session runs with the engine's session defaults") {
+    GraftSession.Defaults.foreach { case (k, v) => assert(TestSpark.spark.conf.get(k) == v, k) }
   }
 
   test("profile toggles flow through") {

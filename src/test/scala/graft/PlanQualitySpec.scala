@@ -2,6 +2,8 @@ package graft
 
 import graft.flight.FlightModel.{Airline, Airport, Flight}
 import graft.flight.FlightEtl
+import graft.operators.FlightQueries
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-quality regression guards: these assert the *physical plan*
@@ -54,6 +56,18 @@ class PlanQualitySpec extends AnyFunSuite {
     val p = FlightEtl.gold(flights, airports, airlines).queryExecution.executedPlan.toString
     assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) == 3)
     assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"))
+  }
+
+  test("flight answers: Q2/Q4/Q5 plan no range-partitioned sort, Q6 one shuffle") {
+    val gold = spark.read.parquet(TestSpark.fixturePath("flight_gold_fixture.parquet"))
+    def p(df: DataFrame): String = df.queryExecution.executedPlan.toString
+    for (q <- Seq[DataFrame => DataFrame](FlightQueries.mostActivePerContinent,
+        FlightQueries.avgFlightLengthPerContinent, FlightQueries.topThreeAircraftPerCountry)) {
+      val plan = p(q(gold))
+      assert(!plan.contains("rangepartitioning"), plan)
+    }
+    val q6 = p(FlightQueries.inOutImbalance(gold))
+    assert(q6.linesIterator.count(_.contains("Exchange")) == 1, q6)
   }
 
   test("q31: norms computed scan-side (once per vector), native dot in plan") {

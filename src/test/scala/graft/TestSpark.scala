@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session across all suites. */
+/** One shared local session across all suites, with the engine's
+  * session defaults.
+  */
 object TestSpark {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
+    .config(GraftSession.Defaults)
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

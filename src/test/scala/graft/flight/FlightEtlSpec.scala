@@ -97,6 +97,19 @@ class FlightEtlSpec extends AnyFunSuite {
     assert(r.getAs[Float]("distance") == 15340.56640625f)
   }
 
+  test("goldSchema is the fixture's schema and the schema FlightEtl.gold writes") {
+    assert(fixture.schema == FlightModel.goldSchema)
+    val flights = Seq(
+      Flight("f1", "A359", Some(1713453442), Some(1f), Some(2f), "AAA", "BBB", "X1", Some(0), "AL1")).toDF()
+    val airports = Seq(
+      Airport("Alpha", "AAA", Some(1.350189f), Some(103.9944f), "Singapore"),
+      Airport("Beta", "BBB", Some(40.639751f), Some(-73.7789f), "United States")).toDF()
+    val airlines = Seq(Airline("Airline One", "AL1")).toDF()
+    val dir = java.nio.file.Files.createTempDirectory("graft-gold-schema").resolve("gold").toString
+    FlightEtl.gold(FlightEtl.silver(flights), airports, airlines).write.parquet(dir)
+    assert(spark.read.parquet(dir).schema == FlightModel.goldSchema)
+  }
+
   test("gold: null coordinates yield null distance") {
     val flights = Seq(
       Flight("f1", "A359", Some(1713453442), Some(1f), Some(2f), "AAA", "BBB", "X1", Some(0), "AL1")).toDF()
